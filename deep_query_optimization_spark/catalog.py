@@ -222,7 +222,7 @@ import weakref
 _READ_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
-# r13 hygiene: bound each per-session memo. A long-lived session
+# bound each per-session memo. A long-lived session
 # scanning many sf_dirs would otherwise accumulate plan entries
 # forever; FIFO-evict the oldest (dict preserves insertion order) past
 # a cap well above the 10 tables × handful of sf_dirs a session uses.

@@ -112,11 +112,10 @@ class DQOEngine:
     # -- execution -------------------------------------------------------
 
     def run(self, sql: str, hints: bool = True) -> float:
-        """Timed execution; ``hints=True`` (the default since round 10,
-        per the round-9 verdict ask) routes through ``optimize_sql``
-        first — the learned join-order hint as a
-        default-on-but-regime-gated engine path (measured round 8:
-        3.0x on the sf10 slow suite, a wash below ~2 s).
+        """Timed execution; ``hints=True`` (the default) routes through
+        ``optimize_sql`` first — the learned join-order hint as a
+        default-on-but-regime-gated engine path (measured: 3.0x on the
+        sf10 slow suite, a wash below ~2 s).
 
         Default-on is safe because every gate fails closed: with no
         trained checkpoint on the box the path latches off after one
@@ -175,7 +174,7 @@ class DQOEngine:
             except Exception as exc:
                 # Latch off for the life of the engine, but say WHY once:
                 # a corrupt choice.json must be distinguishable from "no
-                # checkpoint staged" (round-10 advice).  Note the latch is
+                # checkpoint staged".  Note the latch is
                 # per-engine — after a persist_artifacts restore, build a
                 # fresh Engine (or call load_best explicitly) to re-probe.
                 self._hints_unavailable = True
@@ -194,7 +193,7 @@ class DQOEngine:
             return sql
         # From here every failure returns the caller's ORIGINAL text:
         # candidate emission/estimation can hit constructs the emitter
-        # mishandles (round-9 advice: a GROUP BY candidate raising
+        # mishandles (e.g. a GROUP BY candidate raising
         # AnalysisException out of run()), and an advisory hint must
         # never make a runnable query unrunnable.
         try:
@@ -227,8 +226,8 @@ class DQOEngine:
         """Calibration report matching the LOADED checkpoint: prefer a
         ``calibration.json`` staged beside the model file (written by
         tools/stage_sf10.py), so a session serving the sf10 model gets
-        sf10-derived margins instead of the sf1 default distribution
-        (round-9 advice). Falls back to the repo's sf1 report — correct
+        sf10-derived margins instead of the sf1 default distribution.
+        Falls back to the repo's sf1 report — correct
         for the default ``load_best()`` path, whose staging predates
         per-dir calibration."""
         staged = os.path.join(getattr(self, "_model_dir", ""), "calibration.json")
@@ -356,7 +355,7 @@ class DQOEngine:
         if best_dir is None:
             repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
             best_dir = os.path.join(repo, ".data", "est_best")
-            if not os.path.isdir(best_dir):  # pre-round-8 staging dir
+            if not os.path.isdir(best_dir):  # older staging dir name
                 best_dir = os.path.join(repo, ".data", "est_r7_best")
         with open(os.path.join(best_dir, "choice.json")) as fh:
             choice = json.load(fh)

@@ -121,25 +121,21 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column as an array —
     pure JVM expression (transform over sequence), no UDF.
 
-    r12: the words array is BOUND once per row via
+    The words array is BOUND once per row via
     ``transform(array(words), λw → …)[0]``. Catalyst does not hoist
     lambda-invariant subexpressions out of higher-order functions, so
-    the previous form — ``slice(words(col), …)`` inside the per-shingle
-    lambda — re-split the text once PER SHINGLE: O(words × chars) char
-    work per row where O(chars) suffices (guide §1.2 step 2, per-task
-    work). Output is bit-identical (same strings, same order; A/B'd
-    with exceptAll = 0 both ways); measured ~2.3× on the shingle
-    explode stage at sf0.1."""
+    ``slice(words(col), …)`` inside the per-shingle lambda would
+    re-split the text once PER SHINGLE: O(words × chars) char work per
+    row where O(chars) suffices (guide §1.2 step 2, per-task work).
+    Binding measured ~2.3× faster on the shingle explode stage at
+    sf0.1, with bit-identical output."""
 
     def shingles_of(w: Column) -> Column:
-        # guard: texts with < n words have no n-gram shingles. The bare
-        # sequence(0, size-n) form crashed there — Spark's sequence(0,-1)
-        # is the DESCENDING [0,-1], not empty, feeding slice a 0 start
-        # (latent since round 1; unreachable on the gate corpora, which
-        # have no < n-word docs — behavior for every non-crashing,
-        # non-null input is unchanged; NULL text now propagates as NULL
-        # where the old form returned [''] — pinned in pytest, and all
-        # current consumers explode the array so rows are identical).
+        # guard: texts with < n words have no n-gram shingles. A bare
+        # sequence(0, size-n) crashes there — Spark's sequence(0,-1)
+        # is the DESCENDING [0,-1], not empty, feeding slice a 0 start.
+        # NULL text propagates as NULL (pinned in pytest; every
+        # consumer explodes the array, so it yields no rows).
         return F.when(F.size(w) < n, F.array().cast("array<string>")).otherwise(
             F.array_distinct(
                 F.transform(
@@ -159,7 +155,7 @@ def shingle_hash_array(col: Column | str, n: int = 3) -> Column:
     distinct (id, hv)``, but the dedup runs inside the row via
     ``array_distinct`` (each doc's shingles live in one array, so
     per-row distinct IS the per-doc distinct) — no Exchange, no
-    aggregate. r12 optimization (guide §2.4: remove shuffles outright)."""
+    aggregate (guide §2.4: remove shuffles outright)."""
     c = F.col(col) if isinstance(col, str) else col
     kept = F.filter(word_shingles(c, n), lambda s: s != F.lit(""))
     return F.array_distinct(F.transform(kept, lambda s: hash32(s)))

@@ -63,9 +63,9 @@ def _emit(query: Query, rel_order: list, pred_order: list[int], flips: int, alia
     if preds:
         sql += " WHERE " + " AND ".join(preds)
     # mixed aggregate + plain projections need the same GROUP BY clause
-    # Query.to_sql emits — omitting it made every re-emission of such a
-    # query an AnalysisException, so the hint path could turn a runnable
-    # GROUP BY join into an unrunnable candidate (round-9 advice, high)
+    # Query.to_sql emits — without it every re-emission of such a query
+    # is an AnalysisException, so the hint path would turn a runnable
+    # GROUP BY join into an unrunnable candidate
     plain = [p for p in projs if p.func is None]
     if plain and any(p.func for p in projs):
         sql += " GROUP BY " + ", ".join(

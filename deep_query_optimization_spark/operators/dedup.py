@@ -70,11 +70,10 @@ def exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 def shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, shingle_hash) exploded rows; distinct per doc.
 
-    r12: the per-doc distinct is computed map-side inside the row
-    (``shingle_hash_array``) instead of a ``.distinct()`` over the
-    exploded rows — the old form paid a full Exchange + two
-    HashAggregates for a dedup whose scope never leaves one row
-    (guide §2.4). Same (id, hv) set bit-for-bit."""
+    The per-doc distinct is computed map-side inside the row
+    (``shingle_hash_array``), not by a ``.distinct()`` over the
+    exploded rows: a dedup whose scope never leaves one row needs no
+    Exchange or HashAggregate (guide §2.4)."""
     return parallelize_input(df).select(
         F.col(id_col).alias("id"), F.explode(shingle_hash_array(text_col, n)).alias("hv")
     )
@@ -90,13 +89,13 @@ def jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard similar pairs (id_a < id_b, jaccard ≥ t).
 
-    inter/(|A|+|B|-inter) computed from co-shingle counts. r13: the
+    inter/(|A|+|B|-inter) computed from co-shingle counts. The
     co-shingle step is a groupBy(hv) bucket list + IN-PARTITION pair
-    expansion, not a self-join — one Exchange keyed by hv replaces the
-    old THREE (window df-cap + both self-join sides re-exchanged: the
-    AQE-wrapped cached plan exposes no partitioning, so the join paid
-    Exchange+Sort on each side) and the df-cap rides the same
-    aggregation (guide §2.4: remove shuffles outright). Pairs agree
+    expansion, not a self-join: one Exchange keyed by hv, with the
+    df-cap riding the same aggregation. A self-join would need three
+    (a window for the df-cap, then both join sides re-exchanged,
+    because the AQE-wrapped cached plan exposes no partitioning)
+    (guide §2.4: remove shuffles outright). Pairs agree
     exactly with the join: ids are sorted ascending per bucket, so
     (i, j>i) enumerates each unordered co-shingle pair once with
     id_a < id_b. The bucket table is the materialized shingle index
@@ -132,31 +131,30 @@ def jaccard_pairs(
         .join(groups.select("digest", "rep_id"), "digest")
         .select("id", "rep_id")
     )
-    # r12: members is read by TWO consumers (the ma/mb expansion sides;
-    # the old intra self-join was merged into the expansion tail);
-    # uncached, each re-ran the documents scan + digest aggregation +
-    # join. Persist the narrow (id, rep_id) table once (guide §5:
-    # reuse-justified caching; released via release_caches like the
-    # shingle index).
+    # members is read by TWO consumers (the ma/mb expansion sides);
+    # uncached, each would re-run the documents scan + digest
+    # aggregation + join. Persist the narrow (id, rep_id) table once
+    # (guide §5: reuse-justified caching; released via release_caches
+    # like the shingle index).
     members = cache_index(members, "jaccard_members")
     reps = df.join(
         groups.select(F.col("rep_id").alias(id_col), "cnt"), id_col
     )
 
-    # r12: the group-count weight rides along from the reps row into the
+    # the group-count weight rides along from the reps row into the
     # exploded shingle rows (one extra long per row) instead of being
-    # joined back on id — the old weights-join re-scanned reps and paid
-    # a join for a column the explode already had in hand (guide §2.4)
+    # joined back on id, which would re-scan reps and pay a join for a
+    # column the explode already has in hand (guide §2.4)
     sh = parallelize_input(reps).select(
         F.col(id_col).alias("id"),
         F.col("cnt"),
         F.explode(shingle_hash_array(text_col, n)).alias("hv"),
     )
-    # r13: ONE groupBy(hv) computes the document-level df (sum of
-    # group counts — the weight that makes the cap count DOCUMENTS)
-    # AND pre-groups the bucket for pair expansion: the old form paid
-    # a Window Exchange+Sort for the cap and then re-exchanged BOTH
-    # cached self-join sides on hv (interleaved A/B: 2.57→2.11 s
+    # ONE groupBy(hv) computes the document-level df (sum of group
+    # counts — the weight that makes the cap count DOCUMENTS) AND
+    # pre-groups the bucket for pair expansion, so the cap needs no
+    # Window Exchange+Sort and no self-join side is re-exchanged on hv
+    # (interleaved A/B against the self-join form: 2.57→2.11 s
     # min-of-4 at sf0.1, 2.34→2.09 s on the 10×-dup corpus;
     # rows-identical both, exceptAll 0/0).
     byhv = sh.groupBy("hv").agg(
@@ -200,19 +198,16 @@ def jaccard_pairs(
     )
 
     # expand representative pairs back to document pairs — ONE join
-    # pass (r12 second pass). Intra-group pairs (Jaccard 1.0 between
-    # exact duplicates) ride the same expansion as cross-group pairs:
-    # the diagonal (rep, rep, 1.0) is appended to rep_pairs for every
-    # rep that kept ≥1 shingle (same guard as the old intra self-join —
-    # shingle-free docs produce no rows in the uncollapsed join either),
-    # and the diagonal's expansion keeps each unordered member pair
-    # once via doc_a < doc_b. Off-diagonal rows have id_a < id_b
-    # strictly (the inter join's a.id < b.id), so the filter's first
-    # branch keeps all of them, exactly as before. This replaces the
-    # old 4-join tail (cross: 2 joins; intra: member self-join + sizes
-    # guard join; then a union of two heavy branches) with 2 joins over
-    # a union of already-small inputs — identical output rows
-    # (oracle-checked).
+    # pass. Intra-group pairs (Jaccard 1.0 between exact duplicates)
+    # ride the same expansion as cross-group pairs: the diagonal
+    # (rep, rep, 1.0) is appended to rep_pairs for every rep that kept
+    # ≥1 shingle (shingle-free docs produce no rows in an uncollapsed
+    # join either), and the diagonal's expansion keeps each unordered
+    # member pair once via doc_a < doc_b. Off-diagonal rows have
+    # id_a < id_b strictly (the inter join's a.id < b.id), so the
+    # filter's first branch keeps all of them. Two joins over a union
+    # of already-small inputs, instead of separate cross and intra
+    # branches (oracle-checked).
     diag = sizes.select(
         F.col("id").alias("id_a"),
         F.col("id").alias("id_b"),
@@ -238,9 +233,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str, k: int = 16, n
     over exploded shingle hashes; partial min happens map-side, so the
     shuffle carries one row per (doc, k) not per shingle.
 
-    r12: the per-doc distinct now happens inside the row
-    (``shingle_hash_array`` via ``shingle_hashes``), dropping the old
-    ``.distinct()`` Exchange + double HashAggregate. The min itself
+    The per-doc distinct happens inside the row
+    (``shingle_hash_array`` via ``shingle_hashes``), so no
+    ``.distinct()`` Exchange + double HashAggregate runs. The min itself
     stays an exploded-row groupBy on purpose: a measured alternative
     computing the k mins as ``array_min(transform(...))`` per row was
     ~3× slower — higher-order functions evaluate interpreted,
@@ -274,20 +269,21 @@ def minhash_lsh_candidates(
     blowup at corpus scale, and a genuine duplicate group that large is
     already collapsed by ``exact_duplicates``. Pass None to disable.
 
-    r13: candidates come from ONE groupBy(band, key) bucket list +
-    in-partition pair expansion instead of a band-key self-join over a
-    persisted index — the old form paid a bucket-size Window
+    Candidates come from ONE groupBy(band, key) bucket list +
+    in-partition pair expansion, not a band-key self-join over a
+    persisted index. The self-join pays a bucket-size Window
     (Exchange+Sort), the index materialization, and a join of the
     cache against a BroadcastExchange of ITSELF (the static planner
-    broadcast the whole band index because it is small at sf0.1 — a
+    broadcasts the whole band index because it is small at sf0.1 — a
     shape that cannot survive at corpus scale, where the index exceeds
     the broadcast cap and the join degrades to Exchange+Sort per
-    side). Now the bucket size is just size(ids) and each unordered
+    side). Here the bucket size is just size(ids) and each unordered
     pair is enumerated once in-partition (ids sorted ascending ⇒
-    id_a < id_b, exactly the old a.id < b.id join rows).
-    Interleaved A/B: 1.33→1.19 s min-of-4 at sf0.1, 2.44→2.16 s on the
-    10×-dup corpus; rows-identical (exceptAll 0/0). The bucket table
-    has a single consumer now, so nothing needs persisting (guide §5:
+    id_a < id_b, exactly the self-join's a.id < b.id rows).
+    Interleaved A/B against the self-join: 1.33→1.19 s min-of-4 at
+    sf0.1, 2.44→2.16 s on the 10×-dup corpus; rows-identical
+    (exceptAll 0/0). The bucket table has a single consumer, so
+    nothing needs persisting (guide §5:
     cache only on reuse)."""
     assert k % bands == 0
     r = k // bands
@@ -323,22 +319,19 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     """Per-doc ``bits``-bit SimHash: bit j is the sign of the sum of
     votes (±1) of token-hash bit j over all tokens (with multiplicity).
 
-    r13: back to explode → groupBy(id) with ±1 vote sums, and
-    deliberately so. The r12 map-side form (token-hash array + 16 ×
-    ``size(filter(...))`` per row) rested on a wrong premise: the
-    exploded aggregate does PARTIAL map-side aggregation (plan:
-    ``partial_sum`` below the Exchange), so the shuffle carries one
-    row per doc-partition — never one per token — while the vote sums
-    run whole-stage-codegen'd. The array form evaluated 16 interpreted
-    HOF passes per row instead (guide §2.3 "aggregate before you
-    shuffle" + §1.1 empirical loop): quiet-box interleaved A/B shows
-    explode winning at BOTH scales — 1.03 vs 1.19 s (sf0.1, min-of-5)
-    and 0.86 vs 1.02 s (sf1, min-of-4) — and a single-pass
-    packed-lane fold of the array form measured flat (reports/r13),
-    because per-element interpreted dispatch, not the pass count, is
-    the cost. Output identical (exceptAll 0/0 both scales): docs with
-    no tokens explode to no rows, exactly as the old ``n > 0`` filter
-    dropped them."""
+    Explode → groupBy(id) with ±1 vote sums, deliberately rather than
+    a map-side form (token-hash array + 16 × ``size(filter(...))`` per
+    row). The exploded aggregate does PARTIAL map-side aggregation
+    (plan: ``partial_sum`` below the Exchange), so the shuffle carries
+    one row per doc-partition — never one per token — while the vote
+    sums run whole-stage-codegen'd. The array form evaluates 16
+    interpreted HOF passes per row instead (guide §2.3 "aggregate
+    before you shuffle" + §1.1 empirical loop): quiet-box interleaved
+    A/B shows explode winning at BOTH scales — 1.03 vs 1.19 s (sf0.1,
+    min-of-5) and 0.86 vs 1.02 s (sf1, min-of-4) — and a single-pass
+    packed-lane fold of the array form measures flat, because
+    per-element interpreted dispatch, not the pass count, is the cost.
+    Docs with no tokens explode to no rows and get no signature."""
     toks = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != F.lit("")
     )
@@ -384,10 +377,10 @@ def embedding_near_dup(
 
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), vector_norm(F.col(vec_col)).alias("na"))
     if probe_filter is not None:
-        # r12: broadcast the BOUNDED probe side explicitly. Left alone,
-        # the planner built the nested-loop join on the corpus side and
-        # streamed the (single-partition, post-filter) probe scan — the
-        # whole pairwise cosine ran in ONE task. Broadcasting the probe
+        # broadcast the BOUNDED probe side explicitly. Left alone, the
+        # planner builds the nested-loop join on the corpus side and
+        # streams the (single-partition, post-filter) probe scan — the
+        # whole pairwise cosine runs in ONE task. Broadcasting the probe
         # side streams the parallelized corpus instead, spreading the
         # per-pair work across the cluster (guide §3.1: pick the build
         # side deliberately; estimates after filters are unreliable).

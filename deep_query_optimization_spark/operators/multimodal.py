@@ -85,7 +85,7 @@ _DECODED_COLS = [f.name for f in DECODED_SCHEMA.fields]
 
 
 def _decode_stub_batch(pdf: pd.DataFrame, feat_dim: int = 8) -> pd.DataFrame:
-    """Vectorized ``decode_stub`` over one Arrow batch (r13, guide
+    """Vectorized ``decode_stub`` over one Arrow batch (guide
     §4.2: batch work in native code). The md5 stays per-row — exactly
     where a real codec's per-item decode would sit — but the
     dimension/feature arithmetic runs as numpy over the stacked

@@ -179,7 +179,7 @@ def lloyd_centroids(X: np.ndarray, nlist: int, iters: int = 8, seed: int = 13) -
     rng = np.random.default_rng(seed)
     cents = X[rng.choice(len(X), size=min(nlist, len(X)), replace=False)]
     for _ in range(iters):
-        # r12: distances computed per-centroid instead of via the
+        # distances computed per-centroid instead of via the
         # (n × k × d) broadcast temporary — ~1.7× faster (smaller
         # working set) and BIT-IDENTICAL: each d2[i, j] is the same
         # subtract-square-pairwise-sum over the same d values in the

@@ -119,9 +119,9 @@ def quality_langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Quality features + language ID in ONE scan — column-for-column
     identical to ``quality_features(df).join(lang_id(df), id_col)``
     (both sides are per-doc projections over the same unique key, so
-    the 1:1 inner join is just column concatenation). r12 optimization:
-    the join form scanned documents twice and paid a shuffle join for
-    columns computable side by side in one projection (guide §2.4).
+    the 1:1 inner join is just column concatenation). The join form
+    would scan documents twice and pay a shuffle join for columns
+    computable side by side in one projection (guide §2.4).
     The input is spread across cores first — the regex/array work is
     CPU-bound and a small parquet input arrives as one split."""
     from deep_query_optimization_spark.functions import parallelize_input

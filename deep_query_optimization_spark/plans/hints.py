@@ -112,7 +112,7 @@ def reorder_by_estimate(
     Catalyst's order, expensive ones (where a wrong join order costs
     minutes at 100 TB) remain eligible.
 
-    Measured regimes (round 8): on a sub-second suite (sf1,
+    Measured regimes: on a sub-second suite (sf1,
     reports/learned_hints_sf1.json) the feature is a wash-to-negative
     even gated — predicted deltas sit inside estimator noise; the
     gates above are what keep it from doing harm there. On slow
@@ -134,7 +134,7 @@ def reorder_by_estimate(
             # calibrated on buckets the model has seen says nothing
             # there — falling back to the flat margin would grant
             # override authority exactly where the model's known
-            # failure mode lives (round 8: the sf1 model predicts
+            # failure mode lives (measured: the sf1 model predicts
             # ~0.6 s for 30 s queries in its starved buckets, and the
             # sf10 slow suite's one 0.75x regression came from a
             # default whose predicted bucket had no calibration row).

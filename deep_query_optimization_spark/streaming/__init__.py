@@ -42,7 +42,7 @@ EVENTS_SCHEMA = T.StructType(
 
 
 _NANOS_PROBE: dict[str, bool] = {}
-# r13 hygiene: bound the per-path memo. A long-lived session probing
+# bound the per-path memo. A long-lived session probing
 # many sf_dirs would otherwise accumulate entries forever; FIFO-evict
 # the oldest (dict preserves insertion order) past a cap that is far
 # above any realistic concurrently-live path count.
@@ -54,13 +54,13 @@ def stream_state_partitions(default: int = 4) -> int:
 
     Stateful aggregations pay a per-partition state-store commit every
     micro-batch, so state parallelism must track KEY VOLUME, not
-    cluster width (r12 measurement: 8 near-empty partitions cost 2.2×
+    cluster width (measured: 8 near-empty partitions cost 2.2×
     more than 4 at sf0.1's hundreds of window×type keys / open
     sessions). ``default`` is the sf0.1-sized value; scale runs set
     ``DQO_STREAM_STATE_PARTITIONS`` (millions of open sessions at
     100 TB need hundreds of state partitions — sizing rule: keys ÷
     ~10⁴-10⁵ entries per partition, floor ``default``) instead of
-    inheriting the local tuning (r12 judge what's-wrong #1)."""
+    inheriting the local tuning."""
     import os
 
     v = os.environ.get("DQO_STREAM_STATE_PARTITIONS")
@@ -74,9 +74,9 @@ def events_file_stream(spark: SparkSession, path: str) -> DataFrame:
     requires a directory, so a file path becomes parent dir +
     ``pathGlobFilter``). A one-time batch footer probe decides whether
     ``ts`` is TIMESTAMP(MICROS) (pass-through) or TIMESTAMP(NANOS)
-    (read nanos-as-long, rebuild micros) — memoized per path (r12):
-    the physical type of an existing file never changes, and the probe
-    paid a driver-side listing + footer read on every call."""
+    (read nanos-as-long, rebuild micros) — memoized per path: the
+    physical type of an existing file never changes, and the probe
+    costs a driver-side listing + footer read."""
     import os
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -571,16 +571,17 @@ def q_events_hourly_rollup(spark, sf_dir):
     equivalent of the streaming windowed aggregation in ``streaming/``.
     Output bucket as a string so hashing is engine-neutral.
 
-    r12 second pass: group by the TRUNCATED TIMESTAMP and format once
-    per group after the agg (the streaming twin already has this shape)
-    — the old form ran date_format per ROW and shuffled 16-char string
-    keys where 8-byte timestamps suffice (guide §2.3: narrower shuffle
-    keys). Identical rows/schema (distinct hours ↔ distinct formatted
-    strings; exceptAll 0 both ways); 0.20-0.40 s → 0.17-0.28 s
-    interleaved at sf0.1. NOTE: distinct-hours ↔ distinct-strings holds
-    because the session timezone is pinned to UTC (session.py) — under
-    a DST zone the fall-back hour maps two truncated timestamps to one
-    formatted string, which the old group-by-string form would merge."""
+    Groups by the TRUNCATED TIMESTAMP and formats once per group after
+    the agg (the same shape as the streaming twin), so the shuffle
+    carries 8-byte timestamps, not 16-char string keys, and
+    date_format runs per group, not per ROW (guide §2.3: narrower
+    shuffle keys). Same rows as grouping by the formatted string
+    (distinct hours ↔ distinct formatted strings; exceptAll 0 both
+    ways); 0.20-0.40 s → 0.17-0.28 s interleaved at sf0.1. NOTE:
+    distinct-hours ↔ distinct-strings holds because the session
+    timezone is pinned to UTC (session.py) — under a DST zone the
+    fall-back hour maps two truncated timestamps to one formatted
+    string, which a group-by-string form would merge."""
     e = t(spark, sf_dir, "events")
     return (
         e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h"), "event_type")
@@ -797,12 +798,12 @@ def q_streaming_hourly_rollup(spark, sf_dir):
 
     stream = hourly_rollup(events_file_stream(spark, f"{sf_dir}/events.parquet"), watermark="1 hour")
     name = f"gate_stream_hr_{uuid.uuid4().hex[:8]}"
-    # r12: state parallelism 8 → 4. The rollup's state is #windows ×
-    # #event_types keys bounded by the watermark (hundreds here), and
-    # every micro-batch pays a per-partition state-store commit — 8
-    # near-empty partitions measured 2.2× slower than 4 at sf0.1
-    # (reports/r12: 3.69 s vs 1.67 s min-of-3). Keys-bound, not
-    # cluster-width-bound. r13: the value comes from
+    # state parallelism 4, not cluster width. The rollup's state is
+    # #windows × #event_types keys bounded by the watermark (hundreds
+    # here), and every micro-batch pays a per-partition state-store
+    # commit — 8 near-empty partitions measured 2.2× slower than 4 at
+    # sf0.1 (3.69 s vs 1.67 s min-of-3). Keys-bound, not
+    # cluster-width-bound. The value comes from
     # stream_state_partitions() (env-overridable, sf0.1 default 4) so
     # scale runs size it to their key volume instead of inheriting the
     # local tuning.
@@ -852,10 +853,10 @@ def q_streaming_sessionize(spark, sf_dir):
     )
 
     stream = sessionize(events_file_stream(spark, f"{sf_dir}/events.parquet"), gap="30 minutes")
-    # r12: state parallelism 8 → 4 — same keys-bound sizing argument
-    # (and measurement) as streaming_hourly_rollup above: state holds
-    # only sessions still open within the watermark horizon. r13:
-    # env-overridable via stream_state_partitions() for scale runs.
+    # state parallelism 4 — same keys-bound sizing argument (and
+    # measurement) as streaming_hourly_rollup above: state holds only
+    # sessions still open within the watermark horizon.
+    # Env-overridable via stream_state_partitions() for scale runs.
     return run_available_now_to_files(stream, state_partitions=stream_state_partitions())
 
 
@@ -880,10 +881,10 @@ def q_text_quality_langid(spark, sf_dir):
     """Quality scoring (length/punct/stopword heuristics) + language ID
     (marker-stopword argmax) in one per-doc row (operators/text.py) —
     the two per-document classifiers a corpus pipeline runs together in
-    one scan. Pure JVM column expressions, no UDFs. r12: computed as a
-    true single-scan projection (text.quality_langid) — the previous
-    quality⋈langid self-join on doc_id scanned documents twice and
-    shuffled both sides for a 1:1 key (guide §2.4); identical columns."""
+    one scan. Pure JVM column expressions, no UDFs. Computed as a
+    true single-scan projection (text.quality_langid): a
+    quality⋈langid self-join on doc_id would scan documents twice and
+    shuffle both sides for a 1:1 key (guide §2.4)."""
     from deep_query_optimization_spark.operators.text import quality_langid
 
     return quality_langid(t(spark, sf_dir, "documents"), "doc_id", "text")
@@ -895,9 +896,9 @@ def q_text_fingerprint_tokens(spark, sf_dir):
     accounting: whitespace tokens + BPE-pretokenizer subword tokens
     (operators/text.py) — the per-doc identity and budget numbers a
     training pipeline packs sequences and enforces token quotas with.
-    r12: one scan, one projection — the previous fingerprint⋈counts
-    join on doc_id scanned documents twice and shuffled both sides for
-    a 1:1 key (guide §2.4); identical columns."""
+    One scan, one projection: a fingerprint⋈counts join on doc_id
+    would scan documents twice and shuffle both sides for a 1:1 key
+    (guide §2.4)."""
     from deep_query_optimization_spark.operators.text import subword_token_count, token_count
     from deep_query_optimization_spark.functions import hash64
 
@@ -1087,10 +1088,9 @@ def q_rollup_grouping_sets(spark, sf_dir):
     row (the rollup rows are exactly gid != 2 — the (ls)-only margin
     is what CUBE adds). One pass, one shuffle;
     NULL grouping keys are coalesced so the hash compare is null-free.
-    (Was two registry rows, rollup + cube, through r05 — folded so the
-    51-query registry fits the driver's 50-row correctness window;
-    the separate rollup() API path stays pytest-asserted in
-    tests/test_workload_extras.py.)"""
+    One row, not separate rollup and cube rows, so the registry fits
+    the driver's 50-row correctness window; the separate rollup() API
+    path is pytest-asserted in tests/test_workload_extras.py."""
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_partkey") < 500)
     return (
         li.cube("l_returnflag", "l_linestatus")

@@ -104,11 +104,6 @@ def pick(
     families=STRUCTURAL,
 ) -> dict:
     cands = collect_candidates(train_root, ft_root, families)
-    # DQO_FT_DIRS_EXTRA: additional fine-tune output dirs (same layout
-    # as ft_root) — e.g. an augmentation-variant run beside the plain one
-    for extra in (p for p in os.environ.get("DQO_FT_DIRS_EXTRA", "").split(",") if p):
-        for acc, fam, path, label in collect_candidates(Path("/nonexistent"), Path(extra), families):
-            cands.append((acc, fam, path, f"{label} ({Path(extra).name})"))
     sweep_dirs = [p for p in os.environ.get("DQO_SWEEP_DIRS", "").split(",") if p]
     if sweep_dirs:
         cands += collect_sweep_candidates(sweep_dirs, families)

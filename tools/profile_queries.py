@@ -1,12 +1,13 @@
-"""Round-12 optimization profiler.
+"""Workload query profiler.
 
 Captures ``.explain("formatted")`` for every registered workload query
-into ``plans/r12/<name>_<tag>.txt`` and times each query ``--reps``
-times with the noop sink (guide §1.4), printing min/median so plan
-work and timing evidence come from the same session/shape as bench.py.
+into ``plans/<tag>/<name>.txt`` and times each query ``--reps`` times
+with the noop sink (guide §1.4), writing min/median/all timings to
+``reports/profile_<tag>.json``, so plan work and timing evidence come
+from the same session/shape as bench.py.
 
 Usage:
-  python tools/profile_r12.py --tag before [--reps 3] [--only q1,q2]
+  python tools/profile_queries.py --tag before [--reps 3] [--only q1,q2]
 """
 
 from __future__ import annotations
@@ -41,10 +42,10 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r12"
+    plans_dir = Path(__file__).resolve().parent.parent / "plans" / args.tag
     plans_dir.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark("dqo-profile-r12")
+    spark = get_spark("dqo-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     # same warm-up as bench.py
@@ -89,9 +90,9 @@ def main() -> None:
                 buf = StringIO()
                 with redirect_stdout(buf):
                     df.explain("formatted")
-                (plans_dir / f"{name}_{args.tag}.txt").write_text(buf.getvalue())
+                (plans_dir / f"{name}.txt").write_text(buf.getvalue())
             except Exception as e:  # pragma: no cover - diagnostics only
-                (plans_dir / f"{name}_{args.tag}.txt").write_text(f"explain failed: {e}\n")
+                (plans_dir / f"{name}.txt").write_text(f"explain failed: {e}\n")
         results[name] = {
             "min": min(times),
             "median": round(statistics.median(times), 4),
@@ -100,7 +101,7 @@ def main() -> None:
         print(f"{min(times):8.3f} min {statistics.median(times):8.3f} med  {name}", flush=True)
     release_caches()
 
-    out = args.out or f"reports/r12/profile_{args.tag}.json"
+    out = args.out or f"reports/profile_{args.tag}.json"
     Path(out).parent.mkdir(parents=True, exist_ok=True)
     with open(out, "w") as f:
         json.dump({"sf_dir": sf_dir, "reps": args.reps, "queries": results}, f, indent=1)
