@@ -32,7 +32,8 @@ from deep_query_optimization_spark.generator.guided import BalancedQueryGen
 from deep_query_optimization_spark.generator.partitioner import Log2Partitioner
 from deep_query_optimization_spark.lab.executor import QueryLog, SparkQueryRunner
 from deep_query_optimization_spark.plans import PlanEncoder
-from deep_query_optimization_spark.plans.parser import parse_plan_json
+from deep_query_optimization_spark.plans.parser import parse_optimized_plan
+from deep_query_optimization_spark.plans.parser import parse_plan_json  # noqa: F401 - public name; perfbench wraps it
 from deep_query_optimization_spark.stats import collect_stats
 
 
@@ -53,13 +54,24 @@ class DQOEngine:
         self.db: Database | None = None
         log = QueryLog(log_path) if log_path else None
         self.runner = SparkQueryRunner(spark, clear_cache=False, log=log)
-        self._encoder: PlanEncoder | None = None
         self.model: MLPCostModel | None = None
+        # (model, needs tree encoding), decided once per model object
+        self._model_input: tuple[object, bool] | None = None
         # latched True after a failed checkpoint probe: default-on
         # hints degrade to pass-through without re-hitting the fs
         self._hints_unavailable = False
 
     # -- schema + stats (reference model(use_cache), postgres.py:321) --
+
+    @property
+    def db(self) -> Database | None:
+        return self._db
+
+    @db.setter
+    def db(self, db: Database | None) -> None:
+        # the encoder memoizes per-table vectors: new stats need a new one
+        self._db = db
+        self._encoder: PlanEncoder | None = None
 
     def snapshot(self, use_cache: bool = True) -> Database:
         if use_cache and self.snapshot_path and os.path.exists(self.snapshot_path):
@@ -245,16 +257,12 @@ class DQOEngine:
     # -- estimator (reference estimator/*/train_tpch.py) -----------------
 
     def encode_sql(self, sql: str) -> tuple[np.ndarray, np.ndarray]:
-        df = self.spark.sql(sql)
-        plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
-        return self.encoder.encode_plan(parse_plan_json(plan_json))
+        return self.encoder.encode_plan(parse_optimized_plan(self.spark.sql(sql)))
 
     def encode_sql_tree(self, sql: str):
         """(ids, mat, children) with tree structure preserved — the
         TreeLSTM input (reference treelstm/v1/childsum.py)."""
-        df = self.spark.sql(sql)
-        plan_json = df._jdf.queryExecution().optimizedPlan().toJSON()
-        return self.encoder.encode_tree(parse_plan_json(plan_json))
+        return self.encoder.encode_tree(parse_optimized_plan(self.spark.sql(sql)))
 
     def train_estimator(
         self,
@@ -366,14 +374,17 @@ class DQOEngine:
         """Predicted runtime (seconds) for a query — the reference's
         whole reason to exist, served from the live engine. Structural
         models (TreeLSTM, Gerelt4) are detected by their ``children``
-        forward argument and fed the tree encoding."""
-        if self.model is None:
+        forward argument, once per model object, and fed the tree
+        encoding."""
+        model = self.model
+        if model is None:
             raise RuntimeError("train_estimator or load_estimator first")
-        import inspect
+        if self._model_input is None or self._model_input[0] is not model:
+            import inspect
 
-        needs_children = "children" in inspect.signature(self.model.forward).parameters
-        encode = self.encode_sql_tree if needs_children else self.encode_sql
-        pred_log2 = self.model.predict([encode(sql)])[0]
+            self._model_input = (model, "children" in inspect.signature(model.forward).parameters)
+        encode = self.encode_sql_tree if self._model_input[1] else self.encode_sql
+        pred_log2 = model.predict([encode(sql)])[0]
         return float(2.0 ** np.clip(pred_log2, -10, 20))
 
     def estimate_bucket(self, sql: str) -> int:

@@ -80,16 +80,34 @@ class PlanEncoder:
     REL_DIM = 25
 
     def __init__(self, db: Database) -> None:
+        """``db`` is read once per (table, column): its stats must not
+        change under an encoder — build a new encoder for new stats."""
         self.db = db
         # common padded width: max(selection 74, join 2*(13+25)+5 = 81)
         self.width = max(
             self.COL_DIM + self.REL_DIM + 11 + 11 + 5 + 5 + 4,
             2 * (self.COL_DIM + self.REL_DIM) + 5,
         )
+        # bare column name → (table, column) of its first match in
+        # ``db.tables`` order
+        self._columns: dict[str, tuple[str, str]] = {}
+        for t in db.tables:
+            for c in t.columns:
+                self._columns.setdefault(c.name, (t.name, c.name))
+        self._column_vectors: dict[tuple[str, str], np.ndarray] = {}
+        self._relation_vectors: dict[str, np.ndarray] = {}
 
     # -- column (13) ---------------------------------------------------
 
     def column_vector(self, table: str, column: str) -> np.ndarray:
+        """Read-only: memoized per encoder."""
+        v = self._column_vectors.get((table, column))
+        if v is None:
+            v = self._column_vectors[(table, column)] = self._column_vector(table, column)
+            v.flags.writeable = False
+        return v
+
+    def _column_vector(self, table: str, column: str) -> np.ndarray:
         v = np.zeros(self.COL_DIM)
         try:
             col = self.db[table][column]
@@ -116,6 +134,14 @@ class PlanEncoder:
     # -- relation (25) -------------------------------------------------
 
     def relation_vector(self, table: str) -> np.ndarray:
+        """Read-only: memoized per encoder."""
+        v = self._relation_vectors.get(table)
+        if v is None:
+            v = self._relation_vectors[table] = self._relation_vector(table)
+            v.flags.writeable = False
+        return v
+
+    def _relation_vector(self, table: str) -> np.ndarray:
         v = np.zeros(self.REL_DIM)
         try:
             t = self.db[table]
@@ -235,10 +261,10 @@ class PlanEncoder:
             v[: len(rv)] = rv
             return v
         if node.kind == "selection":
-            table, column, op, value = _parse_condition(self.db, node.condition)
+            table, column, op, value = self._parse_condition(node.condition)
             return self.selection_vector(table, column, op, value)
         if node.kind == "join":
-            cols = _condition_columns(self.db, node.condition)
+            cols = self._condition_columns(node.condition)
             if len(cols) >= 2:
                 (lt, lc), (rt, rc) = cols[0], cols[1]
                 return self.join_vector(lt, lc, rt, rc)
@@ -246,7 +272,7 @@ class PlanEncoder:
         if node.kind in ("projection", "aggregation"):
             cols = []
             for name in node.columns:
-                hit = _find_column(self.db, name)
+                hit = self._find_column(name)
                 if hit:
                     cols.append(hit)
             return self.projection_vector(cols, node.kind == "aggregation")
@@ -292,6 +318,33 @@ class PlanEncoder:
         mat = np.stack([self.encode_node(n) for n in nodes]) if nodes else np.zeros((0, self.width))
         return ids, mat, children
 
+    # -- condition text → columns --------------------------------------
+
+    def _find_column(self, name: str) -> tuple[str, str] | None:
+        return self._columns.get(name.split(".")[-1].strip("`"))
+
+    def _condition_columns(self, condition: str) -> list[tuple[str, str]]:
+        out = []
+        seen = set()
+        for tok in _COND_RE.findall(condition or ""):
+            hit = self._columns.get(tok)
+            if hit and hit not in seen:
+                seen.add(hit)
+                out.append(hit)
+        return out
+
+    def _parse_condition(self, condition: str) -> tuple[str, str, str, object]:
+        cols = self._condition_columns(condition)
+        table, column = cols[0] if cols else ("", "")
+        op = "="
+        for m in _OP_CLASS_RE.finditer(condition or ""):
+            if m.group(1) in _CLASS_TO_OP:
+                op = _CLASS_TO_OP[m.group(1)]
+                break
+        vm = _VALUE_RE.search(condition or "")
+        value = vm.group(1) if vm else None
+        return table, column, op, value
+
 
 def _strip_name(relation: str) -> str:
     m = re.search(r"([A-Za-z_][A-Za-z0-9_]*)\s*$", relation.replace("`", ""))
@@ -306,29 +359,7 @@ def _guess_table(db: Database, columns: list[str]) -> str:
     return ""
 
 
-def _find_column(db: Database, name: str) -> tuple[str, str] | None:
-    bare = name.split(".")[-1].strip("`")
-    for t in db.tables:
-        for c in t.columns:
-            if c.name == bare:
-                return (t.name, c.name)
-    return None
-
-
 _COND_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*)")
-
-
-def _condition_columns(db: Database, condition: str) -> list[tuple[str, str]]:
-    out = []
-    seen = set()
-    for tok in _COND_RE.findall(condition or ""):
-        hit = _find_column(db, tok)
-        if hit and hit not in seen:
-            seen.add(hit)
-            out.append(hit)
-    return out
-
-
 _VALUE_RE = re.compile(r'"value"\s*:\s*"?(-?[0-9.]+)"?')
 _OP_CLASS_RE = re.compile(r'"class"\s*:\s*"[^"]*\.(\w+)"')
 
@@ -342,16 +373,3 @@ _CLASS_TO_OP = {
     "Like": "LIKE",
     "In": "IN",
 }
-
-
-def _parse_condition(db: Database, condition: str) -> tuple[str, str, str, object]:
-    cols = _condition_columns(db, condition)
-    table, column = cols[0] if cols else ("", "")
-    op = "="
-    for m in _OP_CLASS_RE.finditer(condition or ""):
-        if m.group(1) in _CLASS_TO_OP:
-            op = _CLASS_TO_OP[m.group(1)]
-            break
-    vm = _VALUE_RE.search(condition or "")
-    value = vm.group(1) if vm else None
-    return table, column, op, value

@@ -295,3 +295,68 @@ def test_engine_run_hints_default_on_fails_closed(spark, sf_dir, tmp_path, monke
     rt = engine.run(sql)  # the default path end-to-end, no checkpoint
     assert rt > 0
     assert probes["n"] == 1
+
+
+def test_engine_resnapshot_refreshes_encoder(spark, sf_dir, tmp_path):
+    """snapshot(use_cache=False) replaces the stats, and the next encoding
+    must read them — not the memo of the encoder built on the old ones."""
+    import shutil
+    from pathlib import Path
+
+    import numpy as np
+
+    from deep_query_optimization_spark.engine import DQOEngine
+    from deep_query_optimization_spark.plans import PlanEncoder
+    from deep_query_optimization_spark.plans.parser import parse_optimized_plan
+
+    cached = Path(__file__).resolve().parent.parent / "deep_query_optimization_spark/snapshots/sf0.01_schema.json"
+    shutil.copy(cached, tmp_path / "schema.json")
+    engine = DQOEngine(spark, sf_dir, tables=("orders",), snapshot_path=str(tmp_path / "schema.json"))
+    engine.snapshot()  # sf0.01 stats from the cached file
+    sql = "SELECT COUNT(*) AS c FROM orders WHERE o_totalprice > 1000"
+    _, before = engine.encode_sql(sql)
+
+    engine.snapshot(use_cache=False)  # fresh stats of the sf0.001 orders table
+    _, after = engine.encode_sql(sql)
+    assert not np.array_equal(before, after)
+    _, fresh = PlanEncoder(engine.db).encode_plan(parse_optimized_plan(spark.sql(sql)))
+    assert np.array_equal(after, fresh)
+
+
+def test_engine_estimate_inspects_each_model_once(spark, sf_dir, monkeypatch):
+    """estimate decides flat vs tree encoding once per model object."""
+    import inspect
+
+    from deep_query_optimization_spark.engine import DQOEngine
+
+    class Flat:
+        def forward(self, ids, mat):
+            pass
+
+        def predict(self, plans):
+            return [0.0]
+
+    class Tree(Flat):
+        def forward(self, ids, mat, children):
+            pass
+
+    engine = DQOEngine(spark, sf_dir)
+    calls = {"signature": 0, "flat": 0, "tree": 0}
+    signature = inspect.signature
+
+    def counting_signature(fn):
+        calls["signature"] += 1
+        return signature(fn)
+
+    monkeypatch.setattr(inspect, "signature", counting_signature)
+    monkeypatch.setattr(engine, "encode_sql", lambda sql: calls.__setitem__("flat", calls["flat"] + 1))
+    monkeypatch.setattr(engine, "encode_sql_tree", lambda sql: calls.__setitem__("tree", calls["tree"] + 1))
+
+    engine.model = Flat()
+    assert engine.estimate("SELECT 1") == 1.0
+    engine.estimate("SELECT 1")
+    assert calls == {"signature": 1, "flat": 2, "tree": 0}
+    engine.model = Tree()
+    engine.estimate("SELECT 1")
+    engine.estimate("SELECT 1")
+    assert calls == {"signature": 2, "flat": 2, "tree": 2}

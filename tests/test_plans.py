@@ -2,13 +2,22 @@
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from deep_query_optimization_spark.catalog import Database
 from deep_query_optimization_spark.plans import PlanEncoder, parse_optimized_plan, physical_summary
-from deep_query_optimization_spark.plans.parser import physical_summary_of
+from deep_query_optimization_spark.plans.parser import (
+    _json_head,
+    _junction,
+    parse_jvm_plan,
+    parse_plan_json,
+    physical_summary_of,
+    plan_shape,
+)
 
 SNAPSHOT = "deep_query_optimization_spark/snapshots/sf0.01_schema.json"
 
@@ -53,6 +62,126 @@ def test_traversals_consistent(spark, tables):
     assert set(id(n) for n in pre) == set(id(n) for n in post)
 
 
+# -- live plan path vs plan JSON -----------------------------------------
+
+WORKLOAD = "artifacts/gen_r11/workload.csv"
+
+
+def _assert_same_encoding(enc, plan):
+    """The live path's encodings equal those of the whole-plan JSON."""
+    live, ref = parse_jvm_plan(plan), parse_plan_json(plan.toJSON())
+    for a, b in zip(enc.encode_plan(live), enc.encode_plan(ref)):
+        assert np.array_equal(a, b)
+    (ids, mat, children), (ids2, mat2, children2) = enc.encode_tree(live), enc.encode_tree(ref)
+    assert np.array_equal(ids, ids2) and np.array_equal(mat, mat2) and children == children2
+
+
+def _optimized(spark, sql):
+    return spark.sql(sql)._jdf.queryExecution().optimizedPlan()
+
+
+def test_live_plan_matches_json_on_workload_sample(spark, tables, db):
+    """128 workload rows, one seeded pick per SQL-length stratum: each
+    takes the text-shape path and encodes exactly as its plan JSON."""
+    import csv
+    import random
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    with open(root / WORKLOAD, newline="") as fh:
+        sqls = sorted({row["query"] for row in csv.DictReader(fh)}, key=lambda q: (len(q), q))
+    rng, k = random.Random(0), 128
+    sample = [sqls[rng.randrange(i * len(sqls) // k, (i + 1) * len(sqls) // k)] for i in range(k)]
+    enc = PlanEncoder(db)
+    for sql in sample:
+        plan = _optimized(spark, sql)
+        assert plan_shape(plan) is not None, sql
+        _assert_same_encoding(enc, plan)
+
+
+@pytest.mark.parametrize(
+    "sql, guarded",
+    [
+        # the literal's newline spills the Filter onto a second line
+        ("SELECT COUNT(*) AS c FROM orders WHERE o_orderpriority = 'a\nb'", True),
+        # the subquery's plan prints as an inner child, two levels deeper
+        ("SELECT o_orderkey FROM orders WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM orders)", True),
+        ("SELECT o_orderkey FROM orders WHERE 1 = 0", False),  # empty LocalRelation
+        ("SELECT COUNT(*) AS c FROM orders CROSS JOIN region", False),  # Join without condition
+        # the shape holds, but the JSON path names an empty alias by the
+        # attribute under it, so parse_jvm_plan falls back to the JSON
+        ("SELECT o_orderkey + 1 AS ``, o_custkey FROM orders", False),
+    ],
+)
+def test_live_plan_edge_cases(spark, tables, db, sql, guarded):
+    plan = _optimized(spark, sql)
+    assert (plan_shape(plan) is None) == guarded
+    _assert_same_encoding(PlanEncoder(db), plan)
+
+
+def test_live_plan_cached_table_takes_json_path(spark, tables, db):
+    """An ``InMemoryRelation`` prints its cached physical plan as inner
+    children, so the text shape is rejected."""
+    tables["region"].filter("r_regionkey >= 0").createOrReplaceTempView("region_cached")
+    spark.catalog.cacheTable("region_cached")
+    try:
+        plan = _optimized(spark, "SELECT r_name FROM region_cached WHERE r_regionkey > 1")
+        assert "InMemoryRelation" in plan.toString()
+        assert plan_shape(plan) is None
+        _assert_same_encoding(PlanEncoder(db), plan)
+    finally:
+        spark.catalog.uncacheTable("region_cached")
+        spark.catalog.dropTempView("region_cached")
+
+
+# conjunctions whose condition JSON is over the one-reply size
+_LONG_AND = " AND ".join(f"o_orderkey <> {k}" for k in range(40))
+_LONG_OR = " OR ".join(f"o_custkey = {k}" for k in range(40))
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        _LONG_AND,
+        f"({_LONG_OR}) AND o_totalprice > 5",
+        # quoted parentheses and AND inside a literal, then a long chain
+        f"o_orderstatus LIKE '%x) AND (y%' AND o_orderpriority <> 'it\\'s' AND {_LONG_AND}",
+    ],
+)
+def test_long_condition_json_head(spark, tables, db, where):
+    """A condition whose JSON does not fit one reply is fetched as its
+    head; the head's text is the whole JSON's, and it encodes the same."""
+    plan = _optimized(spark, f"SELECT o_orderkey FROM orders WHERE {where}")
+    (i,) = [i for i, (cls, _, _) in enumerate(plan_shape(plan)) if cls == "Filter"]
+    cond = plan.apply(i).condition()
+    full = json.loads(cond.toJSON())
+    head = _json_head(cond)
+    assert len(json.dumps(full).encode()) > 8000 and len(head) < len(full)
+    assert head == full[: len(head)]
+    assert json.dumps(head)[:2000] == json.dumps(full)[:2000]
+    _assert_same_encoding(PlanEncoder(db), plan)
+
+
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        ("((a = 1) AND (b = 2))", ("And", "(a = 1)", "(b = 2)")),
+        ("((a = 1) OR `x) AND (y`)", ("Or", "(a = 1)", "`x) AND (y`")),
+        ("((a = 'it\\'s) OR (') AND (b = 2))", ("And", "(a = 'it\\'s) OR (')", "(b = 2)")),
+        ("((a = 1) AND (a = 1))", None),  # equal operands share a child number
+        ("(a = 1) AND (b = 2)", None),  # the first parenthesis closes early
+        ("(a BETWEEN 1 AND 2 AND b)", None),  # two junctions at one level
+        ("(NOT (a AND b))", None),
+    ],
+)
+def test_junction(sql, expected):
+    got = _junction(sql)
+    if expected is None:
+        assert got is None
+    else:
+        assert (got[0].rsplit(".", 1)[-1], got[1], got[2]) == expected
+
+
 def test_physical_summary_pushdown(spark, tables):
     df = tables["lineitem"].filter(F.col("l_quantity") > 30).select("l_orderkey", "l_quantity")
     df.collect()
@@ -92,6 +221,33 @@ def test_column_vector_layout(db):
     assert 0 < v[1] <= 1  # distinct ratio
     assert v[8] == 1.0  # FLOAT one-hot
     assert enc.column_vector("lineitem", "nope").sum() == 0
+
+
+def test_encoder_column_index_keeps_first_table_match():
+    from deep_query_optimization_spark.catalog import Column, DataType, Table
+
+    db = Database(
+        [
+            Table("a", [Column("k", DataType.NUMBER), Column("x", DataType.FLOAT)]),
+            Table("b", [Column("k", DataType.NUMBER), Column("y", DataType.STRING)]),
+        ]
+    )
+    enc = PlanEncoder(db)
+    assert enc._find_column("t2.`k`") == ("a", "k")
+    assert enc._condition_columns('{"name":"y"} {"name":"k"} {"name":"y"}') == [("b", "y"), ("a", "k")]
+    assert enc._find_column("nope") is None
+
+
+def test_encoder_memoized_vectors_are_read_only(db):
+    enc = PlanEncoder(db)
+    v = enc.column_vector("orders", "o_totalprice")
+    assert v is enc.column_vector("orders", "o_totalprice")
+    assert np.array_equal(v, enc._column_vector("orders", "o_totalprice"))
+    r = enc.relation_vector("orders")
+    assert np.array_equal(r, enc._relation_vector("orders"))
+    for arr in (v, r):
+        with pytest.raises(ValueError):
+            arr[0] = 1.0
 
 
 def test_relation_vector(db):
